@@ -34,8 +34,8 @@ are prefixed (``c<custkey>`` / ``s<suppkey>``) because the two key spaces
 overlap numerically; INSIDE the fixpoint they are carried as the packed
 int64 ``key·2 + kind-bit`` (bijective for 0 ≤ key < 2^62 — same family as
 the unit-sizing bound below) so every join/aggregation shuffles fixed-width
-longs, and the strings are produced only on the final projection
-(``_edges_with_deg``).
+longs, and the strings are produced only in ``q_graph_pagerank``'s final
+select.
 
 Scale posture (100 TB): each iteration is one join (ranks ⋈ edges on src)
 and one aggregation (sum by dst) — the canonical Pregel-as-DataFrame step.
@@ -49,7 +49,7 @@ the loop, not re-joined per step.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
@@ -58,6 +58,20 @@ INIT_UNITS = 10**12
 DAMP_NUM, DAMP_DEN = 17, 20  # 0.85 as an exact rational
 BASE_UNITS = (INIT_UNITS * (DAMP_DEN - DAMP_NUM)) // DAMP_DEN  # (1-d)·INIT
 N_ITER = 3
+PACKED_KEY_LIMIT = 1 << 62  # key·2 + kind stays a bijection below this
+
+
+def _packed_node(key: Column, kind: int) -> Column:
+    """``key·2 + kind`` as int64; a key outside [0, 2^62) would collide with
+    another node's id, so it fails the query instead (NULL stays NULL)."""
+    k = key.cast("long")
+    return F.when(
+        (k < 0) | (k >= F.lit(PACKED_KEY_LIMIT)),
+        F.raise_error(F.concat(
+            F.lit("graph node key outside the packed range [0, 2^62): "),
+            k.cast("string"),
+        )),
+    ).otherwise(k * 2 + kind)
 
 
 def _edges_with_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,8 +83,9 @@ def _edges_with_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-width long instead of a variable-length string (guide §2.2
     "narrower types"), and ``q_graph_pagerank`` unpacks to the contractual
     strings only on the final projection. The packing is a bijection for
-    0 ≤ key < 2^62 — keys here are TPC-H custkey/suppkey, non-negative by
-    schema — so distinct-pairs, degree counts and contribution groups are
+    0 ≤ key < 2^62 (``_packed_node`` raises outside it) — keys here are
+    TPC-H custkey/suppkey, non-negative by schema — so distinct-pairs,
+    degree counts and contribution groups are
     row-for-row identical to the string form (r17 interleaved A/B: 5.64 →
     3.85 s median at sf0.1, 9/9 paired reps faster, results bit-identical).
     """
@@ -81,8 +96,8 @@ def _edges_with_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sk")
     )
     pairs = o.join(li, "ok").select("ck", "sk").distinct()
-    cnode = F.col("ck").cast("long") * 2  # even = customer
-    snode = F.col("sk").cast("long") * 2 + 1  # odd = supplier
+    cnode = _packed_node(F.col("ck"), 0)  # even = customer
+    snode = _packed_node(F.col("sk"), 1)  # odd = supplier
     edges = pairs.select(cnode.alias("src"), snode.alias("dst")).unionByName(
         pairs.select(snode.alias("src"), cnode.alias("dst"))
     )

@@ -57,7 +57,7 @@ import-edited affected.
 Ties inside a tier keep registration order, so the schedule is deterministic
 and the same-file neighbors of an edit stay adjacent. ``tools/rotate_priority.py``
 derives both inputs (CORRECTNESS files + git round boundaries) and emits the
-ordered tuple for registry._PRIORITY.
+ordered tuple (no longer consumed by the registry).
 """
 
 from __future__ import annotations

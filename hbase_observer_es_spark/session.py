@@ -3,8 +3,10 @@
 Local-mode settings mirror what we'd set on a real cluster: AQE on (runtime join
 strategy + skew handling), Arrow on (vectorized pandas-UDF exchange), UTC session
 timezone (so timestamp semantics match the DuckDB oracle and are cluster-TZ-independent).
-On a 1000-executor cluster only master/shuffle-partitions change; the query code is
-identical.
+On a 1000-executor cluster master/shuffle-partitions change, and the package must
+reach the executors' Python workers: locally ``spark.executorEnv.PYTHONPATH`` names
+this checkout, on a cluster the package is installed on (or shipped to) every
+executor. The query code is identical.
 """
 
 from __future__ import annotations
@@ -12,6 +14,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Python workers import the package for executor-side functions (e.g. the
+# applyInPandasWithState state function); they do not inherit the driver's
+# sys.path, so a driver started outside the checkout needs this on theirs.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 RUNTIME_CONF = {
     # AQE: runtime coalesce of shuffle partitions, broadcast-join demotion/promotion,
@@ -69,6 +76,8 @@ def get_spark(app_name: str = "hbase-observer-es-spark",
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(
+            p for p in (_PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p))
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)

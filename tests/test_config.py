@@ -49,15 +49,19 @@ def test_from_attrs_missing_key():
 
 
 def test_registry_priority_order():
-    """Registry order IS the driver-verification schedule: the priority list
-    leads (never-green, changed-this-round, stale-r1), every name resolves, and
-    no duplicates entered via the module dicts."""
-    from hbase_observer_es_spark.registry import _PRIORITY, all_oracles, all_queries
+    """Registry order is ``_MODULES`` order with each module's QUERIES in
+    insertion order, no name twice; oracles follow the same order."""
+    import importlib
 
+    from hbase_observer_es_spark.registry import _MODULES, all_oracles, all_queries
+
+    expected = [
+        name
+        for mod in _MODULES
+        for name in getattr(importlib.import_module(mod), "QUERIES", {})
+    ]
     qs = list(all_queries())
-    assert qs[: len(_PRIORITY)] == list(_PRIORITY)
+    assert qs == expected
     assert len(set(qs)) == len(qs)
-    # oracle dict preserves the same order for the names it covers
     os_ = list(all_oracles())
-    pos = {n: i for i, n in enumerate(qs)}
-    assert os_ == sorted(os_, key=lambda n: pos[n])
+    assert os_ == [n for n in qs if n in set(os_)]

@@ -10,7 +10,9 @@ from pyspark.sql import functions as F
 from hbase_observer_es_spark.operators.graph import (
     BASE_UNITS,
     INIT_UNITS,
+    PACKED_KEY_LIMIT,
     SQL_GRAPH_PAGERANK,
+    _packed_node,
     q_graph_pagerank,
 )
 
@@ -49,6 +51,19 @@ def test_hand_computed_three_node_graph(spark, tmp_path):
         "c2": 629_187_500_000,
     }
     assert sum(got.values()) == 3 * INIT_UNITS  # conserved on this instance
+
+
+def test_packed_node_ids_refuse_out_of_range_keys(spark):
+    """key·2 + kind is a bijection only for 0 <= key < 2^62: in-range keys
+    pack by parity, a negative or too-large key fails the query loudly."""
+    ok = spark.createDataFrame([(0,), (7,), (None,)], "k long")
+    assert [r.n for r in ok.select(_packed_node(F.col("k"), 1).alias("n")).collect()] == [
+        1, 15, None,
+    ]
+    for bad in (-1, PACKED_KEY_LIMIT):
+        df = spark.createDataFrame([(bad,)], "k long")
+        with pytest.raises(Exception, match="outside the packed range"):
+            df.select(_packed_node(F.col("k"), 0)).collect()
 
 
 def test_mass_bounds_at_fixture_scale(spark):

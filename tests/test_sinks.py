@@ -1,10 +1,18 @@
-"""KeyedParquetSink: partition-pruned merges and CDC semantics."""
+"""KeyedParquetSink: partition-pruned merges and CDC semantics; the staged
+shard-publication commit."""
 
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
 
 from hbase_observer_es_spark.sinks.keyed_parquet import KeyedParquetSink
+from hbase_observer_es_spark.sinks.staging import (
+    commit_staged,
+    prepare_staging,
+    stage_blob,
+)
 from hbase_observer_es_spark.sources.filestream import scratch_dir
 
 SCHEMA = "row_key string, qualifier string, value string, ts timestamp, op string"
@@ -225,3 +233,21 @@ def test_streaming_crash_restart_resumes_from_checkpoint(spark):
         tuple(r) for r in q_cdc_tombstone(spark, SF_SMOKE).select(*cols).collect()
     )
     assert got == want
+
+
+def test_staged_commit_replaces_prior_publication(tmp_path):
+    """A re-export sweeps the prior shard set, including shards a wider
+    layout left, and installs the staged one; an export that stops before
+    its commit leaves the published shards and manifest untouched."""
+    out = str(tmp_path)
+    for names in (["a.bin", "b.bin", "c.bin"], ["a.bin", "b.bin"]):
+        staging = prepare_staging(out)
+        for name in names:
+            stage_blob(staging, name, name.encode())
+        commit_staged(out, staging, names, ".bin", "manifest.json", {"n": len(names)})
+    assert sorted(os.listdir(out)) == ["a.bin", "b.bin", "manifest.json"]
+    stage_blob(prepare_staging(out), "a.bin", b"unfinished")
+    with open(os.path.join(out, "a.bin"), "rb") as f:
+        assert f.read() == b"a.bin"
+    with open(os.path.join(out, "manifest.json")) as f:
+        assert json.load(f) == {"n": 2}

@@ -1,5 +1,9 @@
 #!/usr/bin/env python
-"""Derive registry._PRIORITY for the current round from recorded facts.
+"""Derive a verification order for the current round from recorded facts.
+
+The registry no longer carries a ``_PRIORITY`` tuple (its order is
+``_MODULES`` order), so nothing consumes this output; the tool and
+``rotation.py`` await deletion with their tests.
 
 Inputs (both already on disk — nothing hand-maintained):
 * CORRECTNESS_r*.json        → last fully-green round per query;
@@ -16,8 +20,8 @@ filestream.py and would otherwise have left every streaming query's green
 standing (the round-4/5 staleness risk, generalized to helper modules).
 
 Output: the ordered query tuple per rotation.derive_order (never-checked >
-edited-since-green > oldest-green), printed as Python source ready to paste
-into registry._PRIORITY, with one comment line per tier boundary.
+edited-since-green > oldest-green), printed as a Python ``_PRIORITY`` tuple,
+with one comment line per tier boundary.
 
 Usage: python tools/rotate_priority.py [--repo /root/repo]
          [--edited-fn q_a,q_b]   # OPTIONAL extra tier-1.0 names; the set is
