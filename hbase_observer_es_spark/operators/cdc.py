@@ -86,16 +86,30 @@ def latest_cell_state(mut: DataFrame) -> DataFrame:
 def apply_tombstones(mut: DataFrame) -> DataFrame:
     """A8: whole-document tombstones. A qualifier value survives only if its latest
     upsert is NEWER than the key's latest delete; an upsert after the delete
-    re-creates the doc (ES delete-then-index semantics)."""
-    live = latest_cell_state(mut)
-    last_del = (
-        mut.filter(F.col("op") == "delete")
-        .groupBy("row_key")
-        .agg(F.max("ts").alias("del_ts"))
+    re-creates the doc (ES delete-then-index semantics).
+
+    One shuffle: both windows run over a single ``hash(row_key)`` exchange —
+    the key's latest delete (``max(ts) FILTER delete`` per row_key) and the
+    latest_cell_state ranking per ``(row_key, qualifier, op)``, whose keys
+    that partitioning already clusters. ``op`` is in the ranking key because
+    a delete may carry a qualifier (the ``mutations`` view's do), and it must
+    not outrank that qualifier's upserts."""
+    by_cell = Window.partitionBy("row_key", "qualifier", "op").orderBy(
+        F.desc("ts"), F.desc("value")
     )
     return (
-        live.join(last_del, "row_key", "left")
-        .filter(F.col("del_ts").isNull() | (F.col("ts") > F.col("del_ts")))
+        mut.withColumn(
+            "del_ts",
+            F.max(F.when(F.col("op") == "delete", F.col("ts"))).over(
+                Window.partitionBy("row_key")
+            ),
+        )
+        .withColumn("rn", F.row_number().over(by_cell))
+        .filter(
+            (F.col("op") == "upsert")
+            & (F.col("rn") == 1)
+            & (F.col("del_ts").isNull() | (F.col("ts") > F.col("del_ts")))
+        )
         .select("row_key", "qualifier", "value", "ts")
     )
 

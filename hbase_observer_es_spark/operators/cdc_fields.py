@@ -13,8 +13,8 @@ Determinism: integer counts over the same live-state derivation both engines
 already agree on (the q_cdc_doc_merge precedent — its CTEs are mirrored
 verbatim).
 
-Scale: the live-state reduction is cdc.py's (window dedup + broadcast-joined
-tombstones); on top of it this is one countDistinct per qualifier (bounded
+Scale: the live-state reduction is cdc.py's (two windows over one row_key
+shuffle); on top of it this is one countDistinct per qualifier (bounded
 domain) plus a 1-row total broadcast — bucket-frame work only.
 """
 

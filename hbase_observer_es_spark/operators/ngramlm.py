@@ -153,7 +153,13 @@ def q_lm_surprisal(spark, sf_dir: str) -> DataFrame:
     export. The production scorer stays :func:`surprisal_frame`
     (frac_bits=16); this twin is the oracle-checkable projection of the
     same plan shape: bigram explode → two broadcast joins → one
-    aggregation, all Catalyst."""
+    aggregation, all Catalyst.
+
+    Eager, not a lazy plan: building it runs one Spark action,
+    ``uni.count()`` — the vocabulary size v, which the plan then carries as
+    a literal. That count tokenizes the reference slice, groups it by word
+    and counts the groups; under AQE it runs as 4 jobs (measured at sf0.01
+    and sf0.1) before this function returns."""
     from ..io import table
 
     # fan_out A/B'd AMBIGUOUS here (r17: phase-split said faster, two gate

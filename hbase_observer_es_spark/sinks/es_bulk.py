@@ -33,10 +33,11 @@ straddle two timed flushes). The writer therefore hash-partitions actions by
 appear ts-ordered within a file, and a partition only splits across files at
 the 10 000-action cap (the reference's exact exposure).
 
-Scale: one shuffle for the per-Put grouping (map-side combined), one exchange
-for the per-key writer partitioning, ``maxRecordsPerFile`` caps each request
-body — no driver-side buffering anywhere, unlike the reference's single locked
-heap buffer (ElasticsearchBulkOperator.java:47). At 100 TB the bulk files
+Scale: one scan and one exchange per batch. The mutations are
+hash-partitioned by ``row_key`` and the per-action aggregate runs inside those
+partitions, so the grouping needs no shuffle of its own; ``maxRecordsPerFile``
+caps each request body — no driver-side buffering anywhere, unlike the
+reference's single locked heap buffer (ElasticsearchBulkOperator.java:47). At 100 TB the bulk files
 shard by key hash; a fleet of independent POST workers drains them with
 at-least-once retry per file, which the idempotent ``doc_as_upsert`` actions
 tolerate by construction.
@@ -57,7 +58,12 @@ def bulk_actions(mut: DataFrame, index: str = DEFAULT_INDEX) -> DataFrame:
     """Mutation-shaped DataFrame (cdc.py contract: row_key, qualifier, value,
     op, ts) → one row per bulk action: ``(row_key, ts, op, action)`` where
     ``action`` is the complete NDJSON payload (two lines for update, one for
-    delete, embedded newline included)."""
+    delete, embedded newline included).
+
+    One aggregate keyed by ``(row_key, ts, op)``: an upsert group is one Put,
+    its ``array_sort``ed cells the partial doc, and a same-cell collision
+    keeps the last entry of its qualifier run — MAX(value), NULL lowest. A
+    delete group emits one action per delete it holds."""
     meta = lambda verb: F.to_json(  # noqa: E731 - tiny local builder
         F.struct(
             F.struct(
@@ -65,62 +71,71 @@ def bulk_actions(mut: DataFrame, index: str = DEFAULT_INDEX) -> DataFrame:
             ).alias(verb)
         )
     )
-
-    upserts = (
-        mut.filter(F.col("op") == "upsert")
-        # same-cell collisions → deterministic winner first (see docstring)
-        .groupBy("row_key", "ts", "qualifier")
-        .agg(F.max("value").alias("value"))
-        # one Put = one (row_key, ts): cells become the partial doc
-        .groupBy("row_key", "ts")
+    # get(), not element_at: past the last cell it is NULL even in ANSI mode
+    doc = F.expr(
+        "map_from_entries(filter(cells, (c, i) -> "
+        "NOT (get(cells, i + 1).qualifier <=> c.qualifier)))"
+    )
+    is_delete = F.col("op") == "delete"
+    return (
+        mut.filter(F.col("op").isin("upsert", "delete"))
+        .groupBy("row_key", "ts", "op")
         .agg(
-            F.array_sort(F.collect_list(F.struct("qualifier", "value"))).alias("cells")
+            F.array_sort(F.collect_list(F.struct("qualifier", "value"))).alias("cells"),
+            F.count(F.lit(1)).alias("n"),
         )
         .select(
             "row_key",
             "ts",
-            F.lit("upsert").alias("op"),
-            F.concat(
-                meta("update"),
-                F.lit("\n"),
-                F.to_json(
-                    F.struct(
-                        F.map_from_entries("cells").alias("doc"),
-                        F.lit(True).alias("doc_as_upsert"),
-                    )
-                ),
+            "op",
+            F.explode(
+                F.array_repeat(
+                    F.when(is_delete, meta("delete")).otherwise(
+                        F.concat(
+                            meta("update"),
+                            F.lit("\n"),
+                            F.to_json(
+                                F.struct(
+                                    doc.alias("doc"),
+                                    F.lit(True).alias("doc_as_upsert"),
+                                )
+                            ),
+                        )
+                    ),
+                    F.when(is_delete, F.col("n").cast("int")).otherwise(1),
+                )
             ).alias("action"),
         )
     )
 
-    deletes = mut.filter(F.col("op") == "delete").select(
-        "row_key", "ts", F.lit("delete").alias("op"), meta("delete").alias("action")
-    )
-
-    return upserts.unionByName(deletes)
-
 
 def write_bulk(
-    actions: DataFrame,
+    mut: DataFrame,
     out_dir: str,
     max_actions: int = MAX_BULK_ACTIONS,
     n_partitions: int | None = None,
+    index: str = DEFAULT_INDEX,
 ) -> None:
-    """Write action rows as ``_bulk`` request bodies: text part-files of at most
-    ``max_actions`` actions each, key-partitioned and ``(row_key, ts)``-sorted
-    (ordering contract in the module docstring). Each output file IS one valid
-    ``POST _bulk`` body."""
+    """Write a batch of mutations as ``_bulk`` request bodies: text part-files
+    of at most ``max_actions`` actions each, key-partitioned and ``(row_key,
+    ts)``-sorted (ordering contract in the module docstring). Each output file
+    IS one valid ``POST _bulk`` body.
+
+    The mutations are hash-partitioned by ``row_key`` before ``bulk_actions``
+    groups them: a ``(row_key, ts, op)`` group then never spans partitions,
+    so the grouping and the writer share that one exchange."""
     parted = (
-        actions.repartition(n_partitions, "row_key")
+        mut.repartition(n_partitions, "row_key")
         if n_partitions
-        else actions.repartition("row_key")
+        else mut.repartition("row_key")
     )
     (
         # ts ties between an upsert and a delete of the same key order the
         # delete LAST (later action wins in ES) — the same delete-wins-ties
         # rule cdc.apply_tombstones applies, and a deterministic body where a
         # bare (row_key, ts) sort would shuffle the pair arbitrarily.
-        parted.sortWithinPartitions("row_key", "ts", F.col("op") == "delete")
+        bulk_actions(parted, index)
+        .sortWithinPartitions("row_key", "ts", F.col("op") == "delete")
         .select("action")
         .write.option("maxRecordsPerFile", max_actions)
         .mode("overwrite")
@@ -157,8 +172,9 @@ class EsBulkSink:
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """``foreachBatch`` callable."""
         write_bulk(
-            bulk_actions(batch_df, self.index),
+            batch_df,
             self.batch_dir(batch_id),
             self.max_actions,
             self.n_partitions,
+            self.index,
         )

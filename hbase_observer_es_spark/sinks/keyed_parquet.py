@@ -19,8 +19,11 @@ maintained by micro-batch merges:
 * partition versions are written to fresh directories and repointed after the
   write completes, so a crashed batch never corrupts the readable state.
 
-The per-batch "which partitions are touched" set is collected driver-side — it
-is metadata bounded by n_partitions, never data.
+The batch is persisted for the merge. The per-batch "which partitions are
+touched" set is a ``collect_set`` Observation on the one job that fills that
+cache, so it costs no job of its own; it is metadata bounded by n_partitions,
+never data. The merge then reads the batch from the cache, and the cache is
+released when the merge ends, also when it fails.
 
 Restart durability: the partition→current-version map is persisted to
 ``_MANIFEST.json`` in the table directory after every merge (atomic
@@ -43,7 +46,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import apply_tombstones
@@ -128,14 +131,30 @@ class KeyedParquetSink:
             # manifest-loaded old_paths read from (see _last_applied above).
             return
         s = batch_df.sparkSession
-        b = batch_df.select("row_key", "qualifier", "value", "ts", "op").withColumn(
-            "_p", self._pcol()
+        b = (
+            batch_df.select("row_key", "qualifier", "value", "ts", "op")
+            .withColumn("_p", self._pcol())
+            .persist()
         )
-        affected = sorted(r._p for r in b.select("_p").distinct().collect())
-        if not affected:
-            self._last_applied = batch_id
-            self._save_manifest()
-            return
+        try:
+            # one job fills the cache and, riding on it, collects the touched set
+            touched = Observation()
+            b.observe(touched, F.collect_set("_p").alias("p")).write.format(
+                "noop"
+            ).mode("overwrite").save()
+            affected = sorted(touched.get["p"])
+            if affected:
+                self._merge(s, b, affected, batch_id)
+        finally:
+            b.unpersist()
+        self._last_applied = batch_id
+        self._save_manifest()
+
+    def _merge(
+        self, s: SparkSession, b: DataFrame, affected: list[int], batch_id: int
+    ) -> None:
+        """Rewrite the ``affected`` partitions from their current version and
+        the cached batch ``b`` into ``v{batch_id}``."""
         old_paths = [self._current[k] for k in affected if k in self._current]
         if old_paths:
             state = s.read.schema(CELL_SCHEMA).parquet(*old_paths)
@@ -155,8 +174,6 @@ class KeyedParquetSink:
             else:
                 # every key in this partition is tombstoned — partition is empty
                 self._current.pop(k, None)
-        self._last_applied = batch_id
-        self._save_manifest()
 
     def read(self, spark: SparkSession) -> DataFrame:
         if not self._current:

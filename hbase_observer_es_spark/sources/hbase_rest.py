@@ -16,9 +16,12 @@ emits::
 This module parses NDJSON lines of that format (one cell-set document per
 line — one Put's worth of cells, matching the per-RPC granularity of the
 coprocessor) into the engine's mutation contract
-(cdc.py: row_key, qualifier, value, op, ts), entirely JVM-side:
-``from_json`` → ``explode`` → ``unbase64`` — no Python in the path, so the
-source scales like any other scan.
+(cdc.py: row_key, qualifier, value, op, ts), entirely JVM-side: one
+``from_json`` projection, then one ``explode`` of each line's mutation array,
+built from SQL expression text. The cell and delete decodes (base64 key,
+family strip, value, epoch-ms timestamp) are defined once, as that text, and
+all three parsers use it — no Python in the path, so the source scales like
+any other scan.
 
 Semantics mapped to the reference:
 
@@ -35,7 +38,7 @@ Semantics mapped to the reference:
   ``{"delete": "<base64 rowkey>", "timestamp": ms}`` objects (the natural log
   form of the DELETE call), parsed by ``parse_deletes``.
 
-Scale: both parsers are map-only projections over a text scan — no shuffle,
+Scale: every parser is a map-only projection over a text scan — no shuffle,
 no UDF; at 100 TB the JSON lines partition like any text source and the
 parse stays in whole-stage codegen. ``read_stream``-style streaming works
 unchanged: point ``spark.readStream.text`` at the log directory and apply the
@@ -87,35 +90,62 @@ DELETE_SCHEMA = T.StructType(
 )
 
 
-def _b64_str(col):
-    return F.unbase64(col).cast("string")
+_MIXED_SCHEMA = T.StructType(
+    list(CELL_SCHEMA.fields) + list(DELETE_SCHEMA.fields)
+)
 
 
-def _upsert_struct(key, col, val, ts_ms):
-    """THE single cell decode, as one mutation struct: base64 row key,
-    first-colon family strip ('family:qualifier' → qualifier — family names
-    cannot contain ':', qualifiers can, per CellUtil.cloneQualifier; family
-    dropped per SURVEY A5 / D4), base64 value, epoch-ms timestamp. Shared by
-    the relational (_upserts_of) and higher-order (parse_change_log) paths so
-    the two parsers can never decode the same wire bytes differently."""
-    return F.struct(
-        _b64_str(key).alias("row_key"),
-        F.regexp_replace(_b64_str(col), "^[^:]*:", "").alias("qualifier"),
-        _b64_str(val).alias("value"),
-        F.lit("upsert").alias("op"),
-        F.timestamp_millis(ts_ms).alias("ts"),
+def _b64_str(col: str) -> str:
+    return f"CAST(unbase64({col}) AS STRING)"
+
+
+def _mutation(key: str, qualifier: str, value: str, op: str, ts_ms: str) -> str:
+    """THE single mutation decode, as SQL expression text over the parsed
+    doc's fields: base64 row key, epoch-ms timestamp, cdc.py field order.
+    Every parser builds its mutations from it, so no two can decode the same
+    wire bytes differently."""
+    return (
+        f"named_struct('row_key', {_b64_str(key)}, 'qualifier', {qualifier}, "
+        f"'value', {value}, 'op', '{op}', 'ts', timestamp_millis({ts_ms}))"
     )
 
 
-def _delete_struct(key, ts_ms):
-    """Whole-row tombstone struct (qualifier/value NULL), same shared-decode
-    rationale as _upsert_struct."""
-    return F.struct(
-        _b64_str(key).alias("row_key"),
-        F.lit(None).cast("string").alias("qualifier"),
-        F.lit(None).cast("string").alias("value"),
-        F.lit("delete").alias("op"),
-        F.timestamp_millis(ts_ms).alias("ts"),
+# A cell-set document's cells as one mutation array. The family strip is
+# first-colon ('family:qualifier' -> qualifier): family names cannot contain
+# ':', qualifiers can (CellUtil.cloneQualifier); the family is dropped per
+# SURVEY A5 / D4. Missing Row/Cell arrays decode to no mutations.
+_UPSERTS = (
+    "flatten(transform(coalesce(doc.Row, array()), r -> transform("
+    "coalesce(r.Cell, array()), c -> "
+    + _mutation(
+        "r.key",
+        f"regexp_replace({_b64_str('c.column')}, '^[^:]*:', '')",
+        _b64_str("c.`$`"),
+        "upsert",
+        "c.timestamp",
+    )
+    + ")))"
+)
+# A delete document as a zero- or one-element array: a whole-row tombstone
+# (qualifier/value NULL, the reference's postDelete granularity).
+_DELETES = (
+    "CASE WHEN doc.delete IS NOT NULL THEN array("
+    + _mutation(
+        "doc.delete", "CAST(NULL AS STRING)", "CAST(NULL AS STRING)", "delete",
+        "doc.timestamp",
+    )
+    + ") ELSE array() END"
+)
+
+
+def _parse(lines: DataFrame, column: str, schema: T.StructType, muts: str) -> DataFrame:
+    """One ``from_json`` projection, then one explode of the per-line
+    mutation array ``muts``. A line that does not parse is a NULL doc whose
+    array is empty, so it yields no rows."""
+    return (
+        lines.select(F.from_json(F.col(column), schema).alias("doc"))
+        .select(F.explode(F.expr(muts)).alias("m"))
+        .select("m.*")
     )
 
 
@@ -128,58 +158,13 @@ def parse_cellset(lines: DataFrame, column: str = "value") -> DataFrame:
     drops and counts instead of dying (count with a ``is_corrupt`` audit
     column upstream if the pipeline needs the number).
     """
-    parsed = lines.select(
-        F.from_json(F.col(column), CELL_SCHEMA).alias("doc")
-    ).filter(F.col("doc").isNotNull())
-    return _upserts_of(parsed)
-
-
-def _upserts_of(parsed: DataFrame) -> DataFrame:
-    """Parsed cell-set docs (``doc.Row``) → upsert mutations (decode rules in
-    _upsert_struct)."""
-    return (
-        parsed.filter(F.col("doc.Row").isNotNull())
-        .select(F.explode("doc.Row").alias("row"))
-        .select(F.col("row.key").alias("k"), F.explode("row.Cell").alias("cell"))
-        .select(
-            _upsert_struct(
-                F.col("k"),
-                F.col("cell.column"),
-                F.col("cell.`$`"),
-                F.col("cell.timestamp"),
-            ).alias("m")
-        )
-        .select("m.row_key", "m.qualifier", "m.value", "m.op", "m.ts")
-    )
-
-
-def _deletes_of(parsed: DataFrame) -> DataFrame:
-    """Parsed delete docs (``doc.delete``) → whole-row tombstone mutations."""
-    return (
-        parsed.filter(F.col("doc.delete").isNotNull())
-        .select(_delete_struct(F.col("doc.delete"), F.col("doc.timestamp")).alias("m"))
-        .select("m.row_key", "m.qualifier", "m.value", "m.op", "m.ts")
-    )
+    return _parse(lines, column, CELL_SCHEMA, _UPSERTS)
 
 
 def parse_deletes(lines: DataFrame, column: str = "value") -> DataFrame:
     """NDJSON delete-log lines → delete mutations (whole-row tombstones, the
     reference's postDelete granularity; qualifier/value NULL)."""
-    parsed = lines.select(
-        F.from_json(F.col(column), DELETE_SCHEMA).alias("doc")
-    ).filter(F.col("doc").isNotNull())
-    return _deletes_of(parsed)
-
-
-_MIXED_SCHEMA = T.StructType(
-    list(CELL_SCHEMA.fields) + list(DELETE_SCHEMA.fields)
-)
-
-
-_MUT_STRUCT = (
-    "array<struct<row_key:string,qualifier:string,value:string,"
-    "op:string,ts:timestamp>>"
-)
+    return _parse(lines, column, DELETE_SCHEMA, _DELETES)
 
 
 def parse_change_log(lines: DataFrame, column: str = "value") -> DataFrame:
@@ -187,33 +172,13 @@ def parse_change_log(lines: DataFrame, column: str = "value") -> DataFrame:
     access log would record them) → the full mutation stream.
 
     TRUE single pass: one ``from_json`` against the merged schema, then each
-    line's mutations are assembled as ONE array (cell upserts ++ optional
-    delete) with higher-order functions and exploded once. A union of two
-    projections would plan TWO scans of the source (Spark reuses shuffles,
-    not scan subtrees); at 100 TB the text scan and JSON parse are the
-    dominant cost and must happen once — pinned by the single-scan plan test.
+    line's mutations (cell upserts ++ optional delete) are exploded once. A
+    union of two projections would plan TWO scans of the source (Spark
+    reuses shuffles, not scan subtrees); at 100 TB the text scan and JSON
+    parse are the dominant cost and must happen once — pinned by the
+    single-scan plan test.
     """
-    parsed = lines.select(
-        F.from_json(F.col(column), _MIXED_SCHEMA).alias("doc")
-    ).filter(F.col("doc").isNotNull())
-    upsert_muts = F.flatten(
-        F.transform(
-            F.coalesce(F.col("doc.Row"), F.expr("array()")),
-            lambda row: F.transform(
-                F.coalesce(row["Cell"], F.expr("array()")),
-                lambda c: _upsert_struct(
-                    row["key"], c["column"], c["$"], c["timestamp"]
-                ),
-            ),
-        )
-    ).cast(_MUT_STRUCT)
-    delete_muts = F.when(
-        F.col("doc.delete").isNotNull(),
-        F.array(_delete_struct(F.col("doc.delete"), F.col("doc.timestamp"))),
-    ).otherwise(F.expr("array()").cast(_MUT_STRUCT)).cast(_MUT_STRUCT)
-    return parsed.select(
-        F.explode(F.concat(upsert_muts, delete_muts)).alias("m")
-    ).select("m.row_key", "m.qualifier", "m.value", "m.op", "m.ts")
+    return _parse(lines, column, _MIXED_SCHEMA, f"concat({_UPSERTS}, {_DELETES})")
 
 
 # -- test/fixture helpers (driver-side, bounded) ------------------------------

@@ -19,7 +19,7 @@ Reference semantics being reproduced (file:line into /root/reference):
 Deletes are applied against state as of their batch (arrival order) — exactly the
 reference's semantics, where an old upsert arriving after a delete re-creates the doc.
 
-Scale: foreachBatch merge is a keyed join per micro-batch; state lives in a keyed
+Scale: foreachBatch merge is a keyed window per micro-batch; state lives in a keyed
 parquet table (Delta/Iceberg MERGE INTO in production — same plan shape). No driver
 state, no global lock — the partition parallelism the reference's single
 ReentrantLock buffer (ElasticsearchBulkOperator.java:47) cannot have.

@@ -91,7 +91,7 @@ def test_bulk_cap_and_key_ordering(spark):
     muts = [(f"k{i % 7}", "view", str(i), "upsert", _t(i)) for i in range(100)]
     mut = spark.createDataFrame(muts, SCHEMA)
     out = scratch_dir("es_bulk_cap_test")
-    write_bulk(bulk_actions(mut), out, max_actions=10, n_partitions=3)
+    write_bulk(mut, out, max_actions=10, n_partitions=3)
     bodies = _parse_bodies(out)
     assert bodies and all(
         sum(1 for ln in body if "update" in ln or "delete" in ln) <= 10
@@ -220,7 +220,7 @@ def test_same_ts_delete_orders_last_and_wins(spark):
         SCHEMA,
     )
     out = scratch_dir("es_bulk_tie_test")
-    write_bulk(bulk_actions(mut), out, n_partitions=1)
+    write_bulk(mut, out, n_partitions=1)
     (body,) = _parse_bodies(out)
     # update meta, update doc, delete — delete strictly after the upsert
     assert "update" in body[0] and "delete" in body[-1]
@@ -287,3 +287,43 @@ def test_streaming_crash_restart_replays_idempotently(spark):
     n_upserts = mut.filter("op = 'upsert'").select("row_key", "ts").distinct().count()
     n_deletes = mut.filter("op = 'delete'").count()
     assert total == n_upserts + n_deletes
+
+
+GOLDEN_BODY = """\
+{"update":{"_index":"i","_id":"k1"}}
+{"doc":{"click":"7","view":"3"},"doc_as_upsert":true}
+{"update":{"_index":"i","_id":"k1"}}
+{"doc":{"view":"5"},"doc_as_upsert":true}
+{"update":{"_index":"i","_id":"k2"}}
+{"doc":{"click":"1"},"doc_as_upsert":true}
+{"delete":{"_index":"i","_id":"k2"}}
+{"delete":{"_index":"i","_id":"k3"}}
+{"delete":{"_index":"i","_id":"k3"}}
+{"update":{"_index":"i","_id":"k4"}}
+{"doc":{"view":null},"doc_as_upsert":true}
+"""
+
+
+def test_golden_bulk_body_one_partition(spark):
+    """The whole request body, byte for byte: a multi-cell Put is one
+    qualifier-sorted update; a same-cell collision keeps MAX(value) (a NULL
+    loses to any value and stays NULL alone); a delete at its key's upsert
+    ts sorts after it; two identical deletes stay two actions."""
+    mut = spark.createDataFrame(
+        [
+            ("k1", "view", "3", "upsert", _t(1)),
+            ("k1", "click", "7", "upsert", _t(1)),
+            ("k1", "view", None, "upsert", _t(2)),
+            ("k1", "view", "5", "upsert", _t(2)),
+            ("k2", "click", "1", "upsert", _t(3)),
+            ("k2", None, None, "delete", _t(3)),
+            ("k3", None, None, "delete", _t(4)),
+            ("k3", None, None, "delete", _t(4)),
+            ("k4", "view", None, "upsert", _t(5)),
+        ],
+        SCHEMA,
+    )
+    out = scratch_dir("es_bulk_golden_test")
+    write_bulk(mut, out, n_partitions=1, index="i")
+    (body,) = [open(f).read() for f in sorted(glob.glob(f"{out}/part-*"))]
+    assert body == GOLDEN_BODY

@@ -103,13 +103,13 @@ def test_roundtrip_with_real_write_bulk_output(spark, tmp_path):
     import glob as globmod
 
     from hbase_observer_es_spark.operators.cdc import mutations
-    from hbase_observer_es_spark.sinks.es_bulk import bulk_actions, write_bulk
+    from hbase_observer_es_spark.sinks.es_bulk import write_bulk
 
     from .conftest import SF_SMOKE
 
     mut = mutations(spark, SF_SMOKE)
     out = str(tmp_path / "bulk")
-    write_bulk(bulk_actions(mut), out, n_partitions=2)
+    write_bulk(mut, out, n_partitions=2)
     files = sorted(globmod.glob(out + "/part-*"))
     assert files
     body = open(files[0]).read()

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from hbase_observer_es_spark.operators.cdc import mutations  # noqa: E402
 from hbase_observer_es_spark.session import get_spark  # noqa: E402
-from hbase_observer_es_spark.sinks.es_bulk import bulk_actions, write_bulk  # noqa: E402
+from hbase_observer_es_spark.sinks.es_bulk import write_bulk  # noqa: E402
 from hbase_observer_es_spark.sources.filestream import SCRATCH  # noqa: E402
 from hbase_observer_es_spark.sources.hbase_rest import parse_change_log  # noqa: E402
 
@@ -94,7 +94,7 @@ def main() -> None:
     # -- decode + bulk: REST NDJSON → mutations → _bulk bodies (OUR side) -----
     t0 = time.monotonic()
     parsed = parse_change_log(spark.read.text(log_dir))
-    write_bulk(bulk_actions(parsed), bulk_dir)
+    write_bulk(parsed, bulk_dir)
     t_decode_bulk = time.monotonic() - t0
 
     # the metric divides by n — verify the decode actually parsed n mutations
