@@ -130,7 +130,6 @@ class KeyedParquetSink:
             # overwrite of v{batch_id} deletes the very directories the
             # manifest-loaded old_paths read from (see _last_applied above).
             return
-        s = batch_df.sparkSession
         b = (
             batch_df.select("row_key", "qualifier", "value", "ts", "op")
             .withColumn("_p", self._pcol())
@@ -144,17 +143,16 @@ class KeyedParquetSink:
             ).mode("overwrite").save()
             affected = sorted(touched.get["p"])
             if affected:
-                self._merge(s, b, affected, batch_id)
+                self._merge(b, affected, batch_id)
         finally:
             b.unpersist()
         self._last_applied = batch_id
         self._save_manifest()
 
-    def _merge(
-        self, s: SparkSession, b: DataFrame, affected: list[int], batch_id: int
-    ) -> None:
+    def _merge(self, b: DataFrame, affected: list[int], batch_id: int) -> None:
         """Rewrite the ``affected`` partitions from their current version and
         the cached batch ``b`` into ``v{batch_id}``."""
+        s = b.sparkSession
         old_paths = [self._current[k] for k in affected if k in self._current]
         if old_paths:
             state = s.read.schema(CELL_SCHEMA).parquet(*old_paths)
